@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -240,37 +240,36 @@ object NsQueries {
     * station and modal hour (ties break to the lexicographically /
     * numerically smallest, documented since the reference never
     * defined them).
+    *
+    * One scan and one aggregation: each disruption becomes one row
+    * per affected station (`posexplode_outer`, so a row without
+    * stations is kept once with a null position), and the per-
+    * disruption aggregates read only the position-0/null row. The
+    * modal columns are `mode(_, deterministic = true)`, whose tie rule
+    * (lowest value wins) is the smallest-first order above. The
+    * null-date group (NULL `start_time`) has no modal station or hour.
+    * Rows come unordered: the store's `replaceWhere` unions them into
+    * the table anyway.
     */
   def dailyStats(d: DataFrame, clock: Clock): DataFrame = {
-    val base = d.groupBy(to_date(col("start_time")).as("date"))
+    val first = coalesce(col("pos") === 0, lit(true))
+    d.select(
+        to_date(col("start_time")).as("date"),
+        col("type"),
+        col("duration_minutes"),
+        date_format(col("start_time"), "HH").as("hour"),
+        posexplode_outer(split(col("affected_stations"), ",")).as(Seq("pos", "station")))
+      .groupBy("date")
       .agg(
-        count(lit(1)).as("total_disruptions"),
-        sum(when(col("type") === "cancellation", 1).otherwise(0))
+        count(when(first, lit(1))).as("total_disruptions"),
+        sum(when(first && col("type") === "cancellation", 1).otherwise(0))
           .as("total_cancellations"),
-        avg(col("duration_minutes")).as("avg_duration_minutes"),
-        max(col("duration_minutes")).as("max_duration_minutes"))
-
-    def modal(df: DataFrame, keyCol: Column, out: String): DataFrame = {
-      val g = df.groupBy(to_date(col("start_time")).as("date"), keyCol.as(out))
-        .agg(count(lit(1)).as("cnt"))
-      val w = Window.partitionBy("date").orderBy(desc("cnt"), asc(out))
-      g.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .select(col("date"), col(out))
-    }
-    val topStation = modal(
-      d.filter(col("affected_stations").isNotNull)
-        .select(col("start_time"),
-          explode(split(col("affected_stations"), ",")).as("sc")),
-      col("sc"), "most_affected_station")
-    val topHour = modal(
-      d.filter(col("start_time").isNotNull),
-      date_format(col("start_time"), "HH"), "peak_hour")
-
-    base
-      .join(topStation, Seq("date"), "left")
-      .join(topHour, Seq("date"), "left")
+        avg(when(first, col("duration_minutes"))).as("avg_duration_minutes"),
+        max(col("duration_minutes")).as("max_duration_minutes"),
+        when(col("date").isNotNull, mode(col("station"), deterministic = true))
+          .as("most_affected_station"),
+        mode(when(first, col("hour")), deterministic = true).as("peak_hour"))
       .withColumn("calculated_at", clock.ts)
-      .orderBy("date")
   }
 
   /** Today's-stats report (`src/pipeline.py:304-342`). */

@@ -84,20 +84,7 @@ object StreamProf {
       }
       wall
     }
-    if (sys.env.contains("STREAMPROF_AB_SKIP")) {
-      // A = skip-empty upsert (current code), B = no-skip
-      def arm(n: String, noskip: Boolean, tag: String): Double = {
-        if (noskip) sys.props("graft.upsert.noskip") = "1"
-        else sys.props.remove("graft.upsert.noskip")
-        runOnce(n, tag)
-      }
-      names.foreach { n =>
-        arm(n, false, "warmA"); arm(n, true, "warmB")
-        val a = math.min(arm(n, false, "A1"), { arm(n, true, "Bx"); arm(n, false, "A2") })
-        val b = math.min(arm(n, true, "B2"), { arm(n, false, "Ax"); arm(n, true, "B3") })
-        println(f"SKIPAB $n%-32s A(skip) $a%6.2fs  B(noskip) $b%6.2fs")
-      }
-    } else if (sys.env.contains("STREAMPROF_AB_PARTS")) {
+    if (sys.env.contains("STREAMPROF_AB_PARTS")) {
       // in-session interleaved A/B of the gate state-store instance
       // count (A = pinned default, B = STREAMPROF_AB_PARTS)
       val b = sys.env("STREAMPROF_AB_PARTS")

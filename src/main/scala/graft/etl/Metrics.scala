@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Pipeline observability via `Dataset.observe` (CollectMetrics):
@@ -13,14 +13,15 @@ import org.apache.spark.sql.functions._
   */
 object Metrics {
 
-  /** Attach row/null/violation counters to `df` under metric `name`.
-    * `checks` are predicate columns counted when FALSE (violations).
-    * Read the results from a `QueryExecutionListener` after any action
-    * (see PipelineMetricsSpec).
+  /** Attach row/null/violation counters to `df`, delivered to `obs`
+    * (metric name `obs.name`) by the first action that completes on the
+    * returned frame: read them with `obs.get` after it, or from a
+    * `QueryExecutionListener` (see PipelineMetricsSpec). `checks` are
+    * predicate columns counted when FALSE (violations).
     */
   def observeQuality(
       df: DataFrame,
-      name: String,
+      obs: Observation,
       nullCols: Seq[String],
       checks: Map[String, Column] = Map.empty): DataFrame = {
     val nullCounters = nullCols.map(c =>
@@ -28,6 +29,6 @@ object Metrics {
     val checkCounters = checks.toSeq.sortBy(_._1).map { case (n, pred) =>
       sum(when(pred, 0L).otherwise(1L)).as(s"n_bad_$n")
     }
-    df.observe(name, count(lit(1)).as("n_rows"), nullCounters ++ checkCounters: _*)
+    df.observe(obs, count(lit(1)).as("n_rows"), nullCounters ++ checkCounters: _*)
   }
 }

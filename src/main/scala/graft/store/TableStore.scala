@@ -1,10 +1,14 @@
 package graft.store
 
-import org.apache.hadoop.fs.Path
+import java.io.FileNotFoundException
+import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Parquet-backed table store with the reference's two idempotent
   * load semantics (`src/pipeline.py:133-298`), re-expressed as set
@@ -26,63 +30,73 @@ final class TableStore(spark: SparkSession, root: String) {
 
   def path(table: String): String = s"$root/$table"
 
-  /** Schema catalog: what a real table store keeps in its metastore,
-    * so readers never pay parquet footer inference (a Spark job per
-    * `spark.read.parquet` call — measured ~60 ms each at gate scale,
-    * and the store paths call `read` once per batch). Writes record
-    * `df.schema.asNullable`, which is exactly what file-source
-    * inference would return (file sources force every field nullable
-    * — verified empirically on this Spark: write
-    * `k:bigint:false` → read `k:bigint:true`), so a memoized read is
-    * plan-identical to an inferred one. Contract: this TableStore
-    * instance is the only writer of `root` (already the store's
-    * documented role — mutable state goes through TableStore);
-    * external writes would go unseen by the memo exactly as they
-    * would by a real catalog.
-    */
-  private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-
   // recursive nullable-forcing, matching file-source inference
   // (DataSource.resolveRelation applies asNullable to file schemas;
   // the method itself is private[spark])
-  private def forceNullable(dt: org.apache.spark.sql.types.DataType)
-      : org.apache.spark.sql.types.DataType = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case s: StructType => StructType(s.fields.map(f =>
-        f.copy(dataType = forceNullable(f.dataType), nullable = true)))
-      case a: ArrayType => a.copy(
-        elementType = forceNullable(a.elementType), containsNull = true)
-      case m: MapType => m.copy(
-        keyType = forceNullable(m.keyType),
-        valueType = forceNullable(m.valueType), valueContainsNull = true)
-      case other => other
-    }
+  private def forceNullable(dt: DataType): DataType = dt match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = forceNullable(f.dataType), nullable = true)))
+    case a: ArrayType => a.copy(
+      elementType = forceNullable(a.elementType), containsNull = true)
+    case m: MapType => m.copy(
+      keyType = forceNullable(m.keyType),
+      valueType = forceNullable(m.valueType), valueContainsNull = true)
+    case other => other
   }
 
-  private def memoize(table: String, df: DataFrame): Unit =
-    schemaMemo.put(table,
-      forceNullable(df.schema).asInstanceOf[org.apache.spark.sql.types.StructType])
+  private lazy val fs: FileSystem =
+    new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
 
-  def exists(table: String): Boolean = {
-    val p = new Path(path(table))
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+  /** Records `df`'s schema for the table whose data directory is `dir`. */
+  private def writeSchema(dir: String, df: DataFrame): Unit = {
+    val out = fs.create(new Path(dir, TableStore.SchemaFile), true)
+    try out.write(forceNullable(df.schema).json.getBytes(UTF_8))
+    finally out.close()
   }
 
-  def read(table: String): Option[DataFrame] =
-    if (!exists(table)) None
-    else Some(schemaMemo.get(table) match {
-      case null =>
-        val df = spark.read.parquet(path(table))
-        memoize(table, df)
-        df
-      case known => spark.read.schema(known).parquet(path(table))
-    })
+  private def storedSchema(table: String): Option[StructType] =
+    try {
+      val in = fs.open(new Path(path(table), TableStore.SchemaFile))
+      try Some(DataType.fromJson(new String(in.readAllBytes(), UTF_8)).asInstanceOf[StructType])
+      finally in.close()
+    } catch { case _: FileNotFoundException => None }
 
-  def write(table: String, df: DataFrame): Unit = {
-    df.write.mode(SaveMode.Overwrite).parquet(path(table))
-    memoize(table, df)
+  def exists(table: String): Boolean = fs.exists(new Path(path(table)))
+
+  /** Schema catalog: what a real table store keeps in its metastore,
+    * so readers never pay parquet footer inference (a Spark job per
+    * `spark.read.parquet` call, ~60–120 ms with planning). Every write
+    * through this store leaves the table's schema as JSON in
+    * [[TableStore.SchemaFile]] inside the table directory
+    * (`_`-prefixed, so the file source never lists it as data), and
+    * [[swapDir]] writes it into the temp directory before the rename,
+    * so the schema commits atomically with the data. The file lives with the table, not with
+    * this instance: a fresh `TableStore` over the same root (one per
+    * pipeline run) reads jobless, and a schema change written through
+    * one instance is seen by every other. The stored schema is
+    * `df.schema` forced nullable, exactly what file-source inference
+    * returns (file sources force every field nullable: write
+    * `k:bigint:false` → read `k:bigint:true`), so a catalog read is
+    * plan-identical to an inferred one. A table without the file
+    * (written by something else) still reads by inference.
+    */
+  def read(table: String): Option[DataFrame] = storedSchema(table) match {
+    case Some(schema) => Some(spark.read.schema(schema).parquet(path(table)))
+    case None => if (exists(table)) Some(spark.read.parquet(path(table))) else None
+  }
+
+  /** Overwrites the table with `df`; returns the rows written. */
+  def write(table: String, df: DataFrame): Long = writeDir(path(table), df)
+
+  /** Writes `df` and its schema file to `dir`; returns the rows written,
+    * counted by the write job itself through an [[Observation]] — no
+    * second scan.
+    */
+  private def writeDir(dir: String, df: DataFrame): Long = {
+    val rows = Observation()
+    df.observe(rows, count(lit(1)).as("n")).write.mode(SaveMode.Overwrite).parquet(dir)
+    writeSchema(dir, df)
+    rows.get("n").asInstanceOf[Long]
   }
 
   /** Append only rows whose key is not already present; returns the
@@ -90,10 +104,10 @@ final class TableStore(spark: SparkSession, root: String) {
     */
   def appendIfAbsent(table: String, df: DataFrame, key: String): Long =
     read(table) match {
-      case None =>
-        write(table, df.dropDuplicates(key))
-        spark.read.parquet(path(table)).count()
+      case None => write(table, df.dropDuplicates(key))
       case Some(existing) =>
+        // count first and write only a non-empty remainder: an empty
+        // append would still leave a part file behind
         val novel = df.dropDuplicates(key)
           .join(existing.select(key), Seq(key), "left_anti")
         val n = novel.count()
@@ -103,17 +117,27 @@ final class TableStore(spark: SparkSession, root: String) {
 
   /** Latest-wins upsert: rows in `df` replace existing rows with the
     * same key; among duplicates the highest `versionCol` (then the
-    * incoming batch over the stored copy) wins.
+    * incoming batch over the stored copy) wins. Returns the table's
+    * row count after the write, or None when an empty batch skipped it.
     */
-  def upsert(table: String, df: DataFrame, key: String, versionCol: String): Unit =
+  def upsert(table: String, df: DataFrame, key: String, versionCol: String): Option[Long] =
     upsert(table, df, Seq(key), versionCol)
 
   /** Composite-key latest-wins upsert (same semantics as the
-    * single-key form; the key is the tuple of `keys`).
+    * single-key form; the key is the tuple of `keys`). `observe` wraps
+    * the incoming rows where they enter the write, after the emptiness
+    * probe, so counters attached there (`Dataset.observe`) are filled by
+    * the write alone, never by the probe's partial LIMIT-1 scan.
     */
-  def upsert(table: String, df: DataFrame, keys: Seq[String], versionCol: String): Unit =
+  def upsert(
+      table: String,
+      df: DataFrame,
+      keys: Seq[String],
+      versionCol: String,
+      observe: DataFrame => DataFrame = identity): Option[Long] = {
+    def incoming = observe(df).withColumn("__src", lit(1))
     read(table) match {
-      case None => write(table, dedupLatest(df.withColumn("__src", lit(1)), keys, versionCol))
+      case None => Some(write(table, dedupLatest(incoming, keys, versionCol)))
       case Some(existing) =>
         // An empty incoming batch is a provable no-op (union adds no
         // rows, latest-wins keeps every stored row), so skip the
@@ -123,12 +147,12 @@ final class TableStore(spark: SparkSession, root: String) {
         // foreachBatch, which otherwise paid a full table rewrite.
         // The isEmpty probe is a LIMIT-1 job on the batch — cheap next
         // to the rewrite it avoids and negligible next to a real merge.
-        if (df.isEmpty) ()
-        else swapWrite(table, dedupLatest(
-          existing.withColumn("__src", lit(0))
-            .unionByName(df.withColumn("__src", lit(1))),
-          keys, versionCol))
+        if (df.isEmpty) None
+        else Some(swapWrite(table, dedupLatest(
+          existing.withColumn("__src", lit(0)).unionByName(incoming),
+          keys, versionCol)))
     }
+  }
 
   /** Apply a CDC changelog: `changes` carries the table schema plus
     * `opCol` ∈ {I, U, D} and a monotone `versionCol`. Per key the
@@ -245,9 +269,10 @@ final class TableStore(spark: SparkSession, root: String) {
     * everything else is untouched — including removing matched rows
     * that `df` no longer contains, which an upsert cannot express.
     * The refresh primitive for partition-grain recomputes: rewrite
-    * the touched partitions, never the table.
+    * the touched partitions, never the table. Returns the table's row
+    * count after the write.
     */
-  def replaceWhere(table: String, df: DataFrame, cond: org.apache.spark.sql.Column): Unit =
+  def replaceWhere(table: String, df: DataFrame, cond: Column): Long =
     read(table) match {
       case None => write(table, df)
       case Some(existing) =>
@@ -289,7 +314,6 @@ final class TableStore(spark: SparkSession, root: String) {
     */
   def compact(table: String, targetFileMB: Int = 128): Unit =
     read(table).foreach { df =>
-      val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
       val bytes = fs.getContentSummary(new Path(path(table))).getLength
       val nFiles = math.max(1, (bytes / (targetFileMB * 1024L * 1024L)).toInt)
       swapWrite(table, df.repartition(nFiles))
@@ -297,7 +321,6 @@ final class TableStore(spark: SparkSession, root: String) {
 
   /** Number of data files currently backing a table. */
   def fileCount(table: String): Int = {
-    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
     fs.listStatus(new Path(path(table)))
       .count(s => s.isFile && s.getPath.getName.startsWith("part-"))
   }
@@ -309,7 +332,6 @@ final class TableStore(spark: SparkSession, root: String) {
     * `__old`) is skipped. Returns the registered view names.
     */
   def registerViews(): Seq[String] = {
-    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
     def leaves(p: Path, rel: String): Seq[String] = {
       val entries = fs.listStatus(p).toSeq
       if (entries.exists(e => e.isFile && e.getPath.getName.startsWith("part-")))
@@ -345,7 +367,6 @@ final class TableStore(spark: SparkSession, root: String) {
   def writeVersion(table: String, df: DataFrame): Int = {
     // number past EVERY existing dir (committed or crashed debris) so
     // the fresh write never lands in a half-written directory
-    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
     val dir = new Path(path(table))
     val existing =
       if (!fs.exists(dir)) Nil
@@ -359,7 +380,6 @@ final class TableStore(spark: SparkSession, root: String) {
 
   /** Committed versions, ascending ( = dirs carrying `_SUCCESS`). */
   def versions(table: String): Seq[Int] = {
-    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
     val dir = new Path(path(table))
     if (!fs.exists(dir)) return Nil
     fs.listStatus(dir).toSeq
@@ -384,7 +404,6 @@ final class TableStore(spark: SparkSession, root: String) {
     * debris) — the retention pass that bounds storage growth.
     */
   def vacuum(table: String, keep: Int): Unit = {
-    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
     val committed = versions(table)
     val keepSet = committed.takeRight(keep).toSet
     val dir = new Path(path(table))
@@ -404,10 +423,8 @@ final class TableStore(spark: SparkSession, root: String) {
     * only deleted once the new data is confirmed in place — a failed
     * swap must never lose the table.
     */
-  private[store] def swapWrite(table: String, df: DataFrame): Unit = {
-    swapDir(table)(tmp => df.write.mode(SaveMode.Overwrite).parquet(tmp))
-    memoize(table, df)
-  }
+  private[store] def swapWrite(table: String, df: DataFrame): Long =
+    swapDir(table)(writeDir(_, df))
 
   /** Multi-dataset variant of [[swapWrite]]: each `(name, df)` lands at
     * `<table>/<name>`, and the ONE parent-directory rename installs all
@@ -417,21 +434,19 @@ final class TableStore(spark: SparkSession, root: String) {
     * or none does. Atomicity is the filesystem rename's (HDFS/POSIX
     * yes; on S3 use a transactional table format instead).
     */
-  private[store] def swapWriteParts(table: String, parts: Seq[(String, DataFrame)]): Unit = {
+  private[store] def swapWriteParts(table: String, parts: Seq[(String, DataFrame)]): Unit =
     swapDir(table) { tmp =>
       parts.foreach { case (name, df) =>
         df.write.mode(SaveMode.Overwrite).parquet(s"$tmp/$name")
+        writeSchema(s"$tmp/$name", df)
       }
     }
-    parts.foreach { case (name, df) => memoize(s"$table/$name", df) }
-  }
 
-  private def swapDir(table: String)(writeTo: String => Unit): Unit = {
-    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
+  private def swapDir[A](table: String)(writeTo: String => A): A = {
     val target = new Path(path(table))
     val tmp = new Path(path(table) + "__tmp")
     val old = new Path(path(table) + "__old")
-    writeTo(tmp.toString)
+    val written = writeTo(tmp.toString)
     if (fs.exists(old)) fs.delete(old, true)
     val hadTarget = fs.exists(target)
     if (hadTarget && !fs.rename(target, old)) {
@@ -449,5 +464,12 @@ final class TableStore(spark: SparkSession, root: String) {
            else "no previous table existed"))
     }
     if (hadTarget) fs.delete(old, true)
+    written
   }
+}
+
+object TableStore {
+
+  /** The table's schema as JSON, inside its data directory. */
+  val SchemaFile = "_schema.json"
 }

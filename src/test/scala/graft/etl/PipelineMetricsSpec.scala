@@ -1,5 +1,6 @@
 package graft.etl
 
+import org.apache.spark.sql.Observation
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -23,7 +24,8 @@ class PipelineMetricsSpec extends SparkSpec {
       val df = Seq(
         (1L, Some("x"), 5.0), (2L, None, -1.0), (3L, Some("y"), 2.0))
         .toDF("id", "tag", "score")
-      val observed = Metrics.observeQuality(df, "load_metrics",
+      val obs = Observation("load_metrics")
+      val observed = Metrics.observeQuality(df, obs,
         nullCols = Seq("tag"),
         checks = Map("score_nonneg" -> (col("score") >= 0)))
       assert(observed.count() == 3) // the action the metrics ride on
@@ -33,6 +35,7 @@ class PipelineMetricsSpec extends SparkSpec {
       assert(m("n_rows") == 3L)
       assert(m("n_null_tag") == 1L)
       assert(m("n_bad_score_nonneg") == 1L)
+      assert(obs.get == m) // the same counters, read from the Observation
     } finally spark.listenerManager.unregister(listener)
   }
 }

@@ -2,6 +2,8 @@ package graft.store
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.functions.col
+
 import graft.SparkSpec
 
 class TableStoreSpec extends SparkSpec {
@@ -200,5 +202,78 @@ class TableStoreSpec extends SparkSpec {
     store.applyCdc("t", Seq(("b", 8, 30L, "I")).toDF("k", "v", "ver", "op"),
       "k", "ver")
     assert(snap() == expected + (("b", 8, 30L)))
+  }
+
+  test("a fresh TableStore reads a stored table with zero Spark jobs") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-store").toString
+    new TableStore(spark, root).write("t", Seq(("a", 1L)).toDF("k", "v"))
+    val (df, jobs) = withJobCount(new TableStore(spark, root).read("t").get)
+    assert(jobs == 0, s"read ran $jobs jobs")
+    // the stored schema is exactly what footer inference returns
+    assert(df.schema == spark.read.parquet(s"$root/t").schema)
+    assert(df.as[(String, Long)].collect().toSeq == Seq(("a", 1L)))
+  }
+
+  test("a schema change written through one instance is seen by another") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-store").toString
+    val writer = new TableStore(spark, root)
+    val reader = new TableStore(spark, root)
+    writer.upsert("s", Seq(("a", 1L)).toDF("k", "ver"), "k", "ver")
+    writer.upsert("s", Seq(("b", 1L)).toDF("k", "ver"), "k", "ver") // swapped in
+    assert(reader.read("s").get.columns.toSeq == Seq("k", "ver"))
+    // a rewrite with a new schema: the reader sees it, not a stale copy
+    writer.write("s", Seq(("a", 2L, "x")).toDF("k", "ver", "note"))
+    val df = reader.read("s").get
+    assert(df.columns.toSeq == Seq("k", "ver", "note"))
+    assert(df.as[(String, Long, String)].collect().toSeq == Seq(("a", 2L, "x")))
+  }
+
+  test("a table without the schema file still reads by inference") {
+    import spark.implicits._
+    val store = newStore()
+    Seq(("a", 1)).toDF("k", "v").write.parquet(store.path("ext"))
+    assert(!new java.io.File(store.path("ext"), TableStore.SchemaFile).exists())
+    val (df, jobs) = withJobCount(store.read("ext").get)
+    assert(jobs >= 1) // the footer-inference job
+    assert(df.as[(String, Int)].collect().toSeq == Seq(("a", 1)))
+    assert(store.read("missing").isEmpty)
+  }
+
+  test("writes report their row counts; an empty upsert batch skips the write") {
+    import spark.implicits._
+    val store = newStore()
+    assert(store.write("w", Seq(("a", 1L), ("b", 1L)).toDF("k", "ver")) == 2L)
+    assert(store.upsert("w", Seq(("b", 2L), ("c", 2L)).toDF("k", "ver"), "k", "ver")
+      .contains(3L))
+    assert(store.upsert("w", Seq.empty[(String, Long)].toDF("k", "ver"), "k", "ver").isEmpty)
+    assert(store.replaceWhere("w", Seq(("z", 9L)).toDF("k", "ver"), col("k") =!= "a") == 2L)
+    assert(store.read("w").get.count() == 2L)
+  }
+
+  test("multi-part tables keep a schema per part; registerViews is unchanged") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-store").toString
+    val store = new TableStore(spark, root)
+    val agg = new AggTable(store, "stats", AggSpec(Seq("k"), Seq("x")))
+    agg.accumulate("b1", Seq(("a", 1.0)).toDF("k", "x"))
+    val dedup = new DedupStore(store, "corpus", "text", expectedItems = 1000)
+    dedup.admit("b1", Seq("one doc", "another doc").toDF("text"))
+    // each part directory carries its own schema file, none the parent
+    for (part <- Seq("stats/state", "stats/ledger", "corpus/docs"))
+      assert(new java.io.File(s"$root/$part", TableStore.SchemaFile).exists(), part)
+    assert(!new java.io.File(s"$root/stats", TableStore.SchemaFile).exists())
+    // a fresh instance reads the parts jobless, with the inferred schema
+    val fresh = new TableStore(spark, root)
+    val (state, jobs) = withJobCount(fresh.read("stats/state").get)
+    assert(jobs == 0)
+    assert(state.schema == spark.read.parquet(s"$root/stats/state").schema)
+    assert(new AggTable(fresh, "stats", AggSpec(Seq("k"), Seq("x"))).state.get.count() == 1L)
+    assert(new DedupStore(fresh, "corpus", "text", 1000).corpus.get.count() == 2L)
+    // schema files are not data: views register and read as before
+    val views = store.registerViews()
+    assert(views.toSet.contains("stats_state") && views.toSet.contains("corpus_docs"))
+    assert(spark.sql("SELECT count(*) FROM corpus_docs").head().getLong(0) == 2L)
   }
 }
