@@ -31,6 +31,32 @@ object Bench {
         if (pa == pb) s"$pa$sa-${sb.drop(1)}" else s"$a-$b"
     }.toSeq
 
+  /** Time `action`; a throw is caught and returned, not rethrown, so
+    * one failing gate cannot end the run, and the caller records it so
+    * a gate that throws is never reported as a fast success. */
+  def timed(action: => Unit): (Double, Option[Throwable]) = {
+    val t0 = System.nanoTime()
+    val err = try { action; None } catch { case e: Throwable => Some(e) }
+    ((System.nanoTime() - t0) / 1e9, err)
+  }
+
+  /** A JSON string literal for `s`. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** The dump's `failed` object: gate → the passes it threw in
+    * ("warm", "p1", "p2") and its first error, class and message. */
+  def failedJson(failed: Iterable[(String, (Seq[String], Throwable))]): String =
+    failed.map { case (n, (passes, e)) =>
+      val msg = (e.getClass.getName + ": " + String.valueOf(e.getMessage)).take(300)
+      jsonString(n) + ":{\"passes\":" + passes.map(jsonString).mkString("[", ",", "]") +
+        ",\"error\":" + jsonString(msg) + "}"
+    }.mkString("{", ",", "}")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -70,9 +96,15 @@ object Bench {
     // BENCH_r01–r08 lines, which measured the count()-pruned plans.
     def evaluate(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
+    // gate → (passes it threw in, first error), in order of first failure
+    val failures = scala.collection.mutable.LinkedHashMap.empty[String, (Seq[String], Throwable)]
+    def failed(name: String, at: String)(e: Throwable): Unit = {
+      val (passes, first) = failures.getOrElse(name, (Nil, e))
+      failures(name) = (passes :+ at, first)
+    }
     Tables.names.foreach(n => Tables.load(spark, sfDir, n).count())
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-      try evaluate(fn(spark, warmDir)) catch { case _: Throwable => () }
+    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (n, fn) =>
+      timed(evaluate(fn(spark, warmDir)))._2.foreach(failed(n, "warm"))
     }
 
     // TWO full timed passes at the bench SF, per-query min. The
@@ -84,10 +116,11 @@ object Bench {
     // steady-state measurement. min-of-two also strips one-JVM
     // contention noise (GC, cache churn from 500+ sequential
     // queries), which r4 showed can drift shared-query timings 2-3×.
-    def time(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { evaluate(fn(spark, sfDir)) } catch { case _: Throwable => () }
-      (System.nanoTime() - t0) / 1e9
+    def time(tag: String, name: String,
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+      val (sec, err) = timed(evaluate(fn(spark, sfDir)))
+      err.foreach(failed(name, tag))
+      sec
     }
 
     // Load canary: fixed CPU-bound work saturating every core, zero
@@ -149,7 +182,7 @@ object Bench {
       canary(s"$tag:0")
       val r = all.zipWithIndex.map { case ((n, fn), i) =>
         if (i > 0 && i % 25 == 0) canary(s"$tag:$i")
-        n -> time(n, fn)
+        n -> time(tag, n, fn)
       }
       canary(s"$tag:end")
       r
@@ -234,6 +267,7 @@ object Bench {
         ("\"canary\":" + canaryTimes.map { case (at, c) =>
           f"""{"at":"$at","t":$c%.3f}""" }.mkString("[", ",", "]")) +:
         ("\"contended_segments\":" + segJson(segments)) +:
+        ("\"failed\":" + failedJson(failures)) +:
         results.sortBy(-_._2).map { case (n, t) =>
           val (a, b) = (p1m.getOrElse(n, t), p2m.getOrElse(n, t))
           "\"" + n + "\":" + f"""{"min":$t%.3f,"p1":$a%.3f,"p2":$b%.3f}"""
@@ -242,7 +276,7 @@ object Bench {
       if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
       java.nio.file.Files.writeString(p, fields.mkString("{", ",", "}"))
     }
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"action":"noop-write","contended":$contended,"contended_segments":$segsPrinted,"canary":{"min":$cMin%.3f,"max":$cMax%.3f,"n":${canaryTimes.size},"ref":$refIdleSec%.3f,"session_floor":$sessionFloor%.3f},"dump":"$dumpPath","queries":$qs,"sf":"$sfDir"}""")
+    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"n_failed":${failures.size},"action":"noop-write","contended":$contended,"contended_segments":$segsPrinted,"canary":{"min":$cMin%.3f,"max":$cMax%.3f,"n":${canaryTimes.size},"ref":$refIdleSec%.3f,"session_floor":$sessionFloor%.3f},"dump":"$dumpPath","queries":$qs,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

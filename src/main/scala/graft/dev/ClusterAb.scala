@@ -45,11 +45,8 @@ object ClusterAb {
   def main(args: Array[String]): Unit = {
     val rungs = args.headOption.getOrElse("100000,1000000,10000000")
       .split(",").toSeq.map(_.trim.toLong)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.SessionDefaults
+      .builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def time(f: => Long): Double = {

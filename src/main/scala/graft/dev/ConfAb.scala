@@ -1,7 +1,5 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
-
 import graft.{SparkEntry, Tables}
 
 /** Dev tool: IN-SESSION conf A/B. Cross-JVM TimeQuery A/Bs measured

@@ -1,7 +1,5 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
 
 /** Dev tool: dump formatted plans for selected queries so scan
@@ -16,10 +14,8 @@ object ExplainAudit {
         "q13_anti_join", "q20_overlap_join", "q36_ns_overlap",
         "q103_star_join", "q105_containment", "q125_correlated_avg",
         "q126_sole_failure")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.SessionDefaults
+      .builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -1,6 +1,6 @@
 package graft.dev
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: generate the sf1 rung for the scaling-slope ladder.
@@ -105,10 +105,7 @@ object GenSf1 {
           }
       }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.SessionDefaults.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val nOrders = 1500000L * mult

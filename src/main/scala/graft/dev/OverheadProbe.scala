@@ -1,7 +1,5 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
-
 import graft.{SparkEntry, Tables}
 
 /** Dev tool: decompose the per-gate fixed overhead that multiplies by
@@ -29,12 +27,7 @@ object OverheadProbe {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val names = args.drop(1).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.SessionDefaults.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Tables.names.foreach { n =>
       try Tables.load(spark, dir, n).count()

@@ -2,8 +2,6 @@ package graft.dev
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.{SparkEntry, Tables}
 
 /** Dev tool: write `explain("formatted")` for selected (default: all)

@@ -1,7 +1,5 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: steady-state timing (min of two runs after a warm-up)
   * for selected queries at bench parallelism, with optional formatted
   * plans. `PROF_DIR` overrides the sf0.1 default; `PROF_EXPLAIN=1`
@@ -20,11 +18,8 @@ object Prof {
       System.setProperty("java.io.tmpdir", base.toString)
       System.setProperty("spark.local.dir", base.toString)
     }
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.SessionDefaults
+      .builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val dir = sys.env.getOrElse("PROF_DIR", "/root/testdata/sf0.1")
     val doExplain = sys.env.contains("PROF_EXPLAIN")

@@ -1,7 +1,5 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: measured scaling evidence for SCALING.md.
   *
   * Runs each named query at a ladder of scale factors inside one JVM
@@ -27,11 +25,7 @@ object ScaleSlopes {
       "/root/testdata/sf0.001,/root/testdata/sf0.01,/root/testdata/sf0.1")
       .split(",").toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.SessionDefaults.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val listener = new TaskMetricsListener
     spark.sparkContext.addSparkListener(listener)

@@ -1,7 +1,5 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
-
 import graft.{SparkEntry, Tables}
 
 /** Dev tool: time selected queries with Bench's protocol (untimed

@@ -152,7 +152,8 @@ object GlobalOrder {
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .join(broadcast(per), "__bkt")
       .withColumn(name,
-        when(col("__soff").isNull, col("__lsum"))
+        when(col("__lsum").isNull, col("__soff"))
+          .when(col("__soff").isNull, col("__lsum"))
           .otherwise(col("__soff") + col("__lsum")))
       .drop("__bkt", "__v", "__lsum", "__soff")
   }

@@ -1,6 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.{DecimalType, LongType}
 
 /** One verifiable operator query.
   *
@@ -41,4 +43,47 @@ object QueryDef {
     *    HUGEINT), ranks cast to BIGINT on the Spark side.
     */
   val determinismNotes: String = "see scaladoc"
+
+  /** Exact 2-decimal view of a money/quantity double. The source data
+    * is generated at 2 decimals, so this cast is lossless; decimal
+    * sums are associative → safe under Spark partial aggregation AND
+    * identical to DuckDB's sequential sum.
+    */
+  def dec(c: Column): Column = c.cast(DecimalType(18, 2))
+
+  /** Integer DECIMAL(38,0): exact products and sums of scaled integers
+    * past the LONG range. */
+  def dec38(c: Column): Column = c.cast(DecimalType(38, 0))
+
+  /** `o_totalprice` in integer cents (exact: the source is 2-decimal). */
+  def cents: Column =
+    (col("o_totalprice").cast(DecimalType(18, 2)) * 100).cast(LongType)
+
+  /** 2^20 fixed-point scale: doubles quantized to this lattice sum
+    * exactly as LONGs in any order. */
+  val Q = 1048576L
+
+  /** 2^40 = Q², de-quantization of a product of two Q-scaled values. */
+  val Q2 = 1099511627776d
+
+  /** DECIMAL(·,4) → DOUBLE the way DuckDB does it: the unscaled
+    * integer converts first (one rounding — these squared-price sums
+    * exceed 2^53), then divides by 10⁴. Spark's native cast rounds
+    * the rational once (correctly), which differs by 1 ulp on some
+    * sums; the oracle can't be changed, so the engine reproduces the
+    * two-step here. Scale-2 money sums stay under 2^53 unscaled and
+    * are immune.
+    */
+  def d4ToDouble(c: Column): Column =
+    (c * lit(10000L)).cast(DecimalType(38, 0)).cast("double") / lit(10000.0d)
+
+  /** documents/embeddings ship as one small parquet file → one input
+    * partition, which would serialize the md5/shingle-heavy compute on
+    * a single core. Spread rows across the cluster first; results are
+    * partitioning-independent (everything aggregates + totally
+    * orders). At real scale the scan has natural parallelism and this
+    * becomes a no-op-sized shuffle.
+    */
+  def spread(s: SparkSession, df: DataFrame): DataFrame =
+    df.repartition(s.sparkContext.defaultParallelism)
 }

@@ -48,4 +48,16 @@ class BenchCanarySpec extends AnyFunSuite {
     assert(Bench.contendedSegments(Nil, ref).isEmpty)
     assert(Bench.contendedSegments(Seq("p1:0" -> 9.9), ref).isEmpty)
   }
+
+  test("a gate that throws is recorded as failed, not timed as a success") {
+    val (_, ok) = Bench.timed(())
+    assert(ok.isEmpty)
+    val (sec, err) = Bench.timed(throw new IllegalStateException("boom \"x\"\n"))
+    assert(sec >= 0.0)
+    assert(err.map(_.getMessage).contains("boom \"x\"\n"))
+    val json = Bench.failedJson(Seq("q1_a" -> (Seq("warm", "p1", "p2"), err.get)))
+    assert(json == "{\"q1_a\":{\"passes\":[\"warm\",\"p1\",\"p2\"]," +
+      "\"error\":\"java.lang.IllegalStateException: boom \\\"x\\\"\\u000a\"}}", json)
+    assert(Bench.failedJson(Nil) == "{}")
+  }
 }

@@ -85,12 +85,10 @@ class DegreeOrientationSpec extends SparkSpec {
     // pin the SOURCE (the KeyOrderedFold pattern): an inline id-ordered
     // rewrite in either gate would pass every hash gate and re-open
     // the single-task wedge blowup unseen
-    for (f <- Seq("src/main/scala/graft/queries/Round6Queries.scala",
-                  "src/main/scala/graft/queries/Round44Queries.scala")) {
-      val src = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(f)), "UTF-8")
+    for (g <- Seq("q161_triangle_count", "q288_clustering_coeff")) {
+      val src = graft.queries.GateSource.definition(g)
       assert(src.contains("DegreeOrientation"),
-        s"$f no longer routes through DegreeOrientation.orient")
+        s"$g no longer routes through DegreeOrientation.orient")
     }
   }
 }

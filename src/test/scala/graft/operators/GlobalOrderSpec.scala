@@ -61,8 +61,15 @@ class GlobalOrderSpec extends SparkSpec {
   }
 
   test("runningSum matches single-partition cumulative sum") {
-    for ((seed, n, ties) <- cases) {
-      val df = frame(seed, n, ties)
+    // plus a frame whose upper key range holds only null values: those
+    // buckets' local prefixes are all null while earlier buckets have
+    // a sum, which the built-in carries forward
+    val nullTail = frame(5L, 300, 0).withColumn("x",
+      when(col("k") > 0, lit(null).cast("long")).otherwise(col("x")))
+    val inputs = cases.map { case (seed, n, ties) =>
+      frame(seed, n, ties) -> s"seed=$seed ties=$ties"
+    } :+ (nullTail -> "null-valued upper keys")
+    for ((df, label) <- inputs) {
       val order = Seq(col("k").asc, col("id").asc)
       val expect = df.withColumn("s",
         sum("x").over(Window.orderBy(order: _*)
@@ -71,7 +78,7 @@ class GlobalOrderSpec extends SparkSpec {
         order, col("x"), "s")
       assert(got.select("id", "s").except(expect.select("id", "s")).isEmpty &&
         expect.select("id", "s").except(got.select("id", "s")).isEmpty,
-        s"runningSum mismatch seed=$seed ties=$ties")
+        s"runningSum mismatch $label")
     }
   }
 

@@ -54,4 +54,14 @@ class CoverageDriftSpec extends AnyFunSuite {
     val both = (oracles intersect dyn).toSeq.sorted
     assert(both.isEmpty, s"gates with BOTH static and dynamic oracles: ${both.mkString(", ")}")
   }
+
+  test("the registry rejects two gates that share a name") {
+    val run: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame =
+      (_, _) => throw new UnsupportedOperationException
+    val a = QueryDef("q0_twice", run, None)
+    val e = intercept[IllegalArgumentException](graft.SparkEntry.registry(
+      Seq(a, QueryDef("q1_once", run, None), a.copy(oracle = Some("SELECT 1")))))
+    assert(e.getMessage.contains("duplicate gate names: q0_twice"), e.getMessage)
+    assert(!e.getMessage.contains("q1_once"), e.getMessage)
+  }
 }
